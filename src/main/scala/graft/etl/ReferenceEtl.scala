@@ -1,9 +1,10 @@
 package graft.etl
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType}
 import scala.collection.mutable.ArrayBuffer
+import scala.jdk.CollectionConverters._
 
 import graft.ops.Ids
 import graft.parse.{GridRow, HtmlGrid, MiniDom, ParsedAssignment, Personnel}
@@ -50,178 +51,76 @@ final case class EtlTables(
   *  - S1-S4/T1/T3/T4/T7 — per-file pure parse, one task per file
   *    (graft.parse.HtmlGrid inside a flatMap; the only sequential state —
   *    rowspan counters — is file-scoped by the data's own semantics);
-  *  - T2 okrug/gubernia forward-fill + segment ids — window `last`
-  *    over (file) ordered by rowIdx (:520,:567-572,:654-671);
-  *  - T5 location ditto — window `last` (:677-681);
-  *  - P1-P13 — `parsePersonnel` UDF + posexplode (:304-501,:706);
-  *  - T6 personnel ditto — window `last` over parsed-record structs
-  *    (:700-706,:754-755);
-  *  - E5 senior as-of resolution — per-file sorted fold via
-  *    groupByKey(file).flatMapGroups (:724-744): the senior cache is
-  *    *recursively* defined over emitted rows (a resolved special row can
-  *    itself become the cache source for later rows), which no fixed
-  *    window can express; files are independent, so this parallelizes
-  *    exactly like the parse stage;
-  *  - E1-E4 dims — distinct + first-seen order + scale-safe two-phase
-  *    ranking (graft.ops.Ids.sequenceBy), replacing SERIAL PKs;
-  *  - E6 fact assembly — broadcast joins of the tiny dims;
+  *  - T2-E5 — one ordered pass over each file's parsed rows, in the same
+  *    task ([[FileFold]] then [[SeniorResolver]]): okrug/gubernia fills and
+  *    segment ids (:520,:567-572,:654-671), location ditto (:677-681),
+  *    role and counts (:656-659,:683-698), personnel parse + ditto + explode
+  *    (:304-501,:700-706,:754-755), and senior as-of resolution (:724-744).
+  *    Every one of them is keyed by file and ordered by row, and the senior
+  *    cache is *recursively* defined over emitted rows, so the file is the
+  *    unit of work and no stage needs a shuffle;
+  *  - E1-E4 dims — distinct on the executors, numbered in first-seen order
+  *    on the driver (replacing SERIAL PKs): every dim is broadcast into the
+  *    fact join, so each is driver-sized by construction;
+  *  - E6 fact assembly — broadcast joins of the tiny dims, AssignmentID by
+  *    the scale-safe two-phase ranking (graft.ops.Ids.sequenceBy);
   *  - S5-S8 sinks — parquet, fact partitioned by Year (:160-169 indexes).
   *
   * At 100 TB the per-file stages scale with file count, the only wide
-  * exchanges are the per-file window shuffle and the tiny dim builds, and
-  * every dim join is broadcast.
+  * exchanges are the tiny dim builds and the fact numbering, and every dim
+  * join is broadcast.
   */
 object ReferenceEtl {
 
   // ---- scalar UDF surface (all pure Scala, deterministic) -----------------
   private val stdUdf = udf((s: String) => RuText.standardizeText(s))
-  private val canonUdf = udf((s: String) => RuText.canonicalInspectorName(s))
-  private val cleanNumUdf = udf((s: String) => RuText.cleanNumber(s))
-  private val parseUdf = udf((s: String) => Personnel.parse(s))
-  // Ditto-marker check (:701): standardize_text(html.unescape(cell).strip()).
-  private val dittoStdUdf = udf((s: String) =>
-    RuText.standardizeText(pyStrip(MiniDom.unescapeEntities(if (s == null) "" else s))))
-  // PersonnelRawString (:767): html.unescape(cell.strip()).
-  private val persRawUdf = udf((s: String) =>
-    MiniDom.unescapeEntities(pyStrip(if (s == null) "" else s)))
-  // T8 role classification (:683-698) → (role, uchastokId, uchastokDesc).
-  private val roleUdf = udf((raw: String) => RoleClassifier.classify(raw))
-  // T6 ditto memory: last record eligible to be remembered (:754 after the
-  // :748 skip — named, non-vacancy, non-special, canonicalizable).
-  private val lastRealUdf = udf((arr: Seq[ParsedAssignment]) =>
-    if (arr == null) None
-    else arr.reverseIterator.find(r =>
-      r.name != null && !r.isVacancy && r.specialRole == null &&
-        RuText.canonicalInspectorName(r.name) != null))
   private val stripCityKeyUdf = udf((s: String) =>
     if (s == null) null else stripChars(s, " .,:;"))
   private val pyStripOrNullUdf = udf((s: String) =>
     if (s == null || s.isEmpty) null else { val t = pyStrip(s); if (t.isEmpty) null else t })
-  private val pyStripUdf = udf((s: String) => pyStrip(if (s == null) "" else s))
 
-  /** Read + parse the corpus directory into classified grid rows.
-    * File order (= surrogate-id order) follows the reference's HTML_FILES
-    * list (:16-21), which is filename-sorted. */
-  def gridRows(spark: SparkSession, dir: String): Dataset[GridRow] = {
+  /** One task per corpus file: `f(fileName, year, wholeText)`. File order
+    * (= surrogate-id order) follows the reference's HTML_FILES list
+    * (:16-21), which is filename-sorted: fileIdx is the year, which is
+    * stable across listing order because the corpus years are distinct. */
+  private def perFile[T: Encoder](spark: SparkSession, dir: String)(
+      f: (String, Int, String) => Iterator[T]): Dataset[T] = {
     import spark.implicits._
-    val files = spark.read.option("wholetext", "true").textFile(dir)
+    val yearPat = "fabric(\\d{4})\\.html$".r
+    spark.read.option("wholetext", "true").textFile(dir)
       .withColumn("path", input_file_name())
       .as[(String, String)]
-    val yearPat = "fabric(\\d{4})\\.html$".r
-    files.flatMap { case (content, path) =>
-      val base = path.substring(path.lastIndexOf('/') + 1)
-      yearPat.findFirstMatchIn(base) match {
-        case Some(m) =>
-          val year = m.group(1).toInt
-          // fileIdx from the year rank is stable across listing order; the
-          // corpus years are distinct and filename-ordered (:16-21).
-          HtmlGrid.parseFile(base, year, year, content)
-        case None => Vector.empty
+      .flatMap { case (content, path) =>
+        val base = path.substring(path.lastIndexOf('/') + 1)
+        yearPat.findFirstMatchIn(base) match {
+          case Some(m) => f(base, m.group(1).toInt, content)
+          case None => Iterator.empty
+        }
       }
-    }
   }
 
-  /** Stages T2..E5: grid rows → resolved assignment rows. */
+  /** Read + parse the corpus directory into classified grid rows. */
+  def gridRows(spark: SparkSession, dir: String): Dataset[GridRow] = {
+    import spark.implicits._
+    perFile(spark, dir)((base, year, content) => HtmlGrid.parseFile(base, year, year, content).iterator)
+  }
+
+  /** Stages T2..E5: each file's grid rows → resolved assignment rows.
+    *
+    * MEMORY BOUND: senior back-references are inherently sequential per
+    * source file (the reference walks one document's rows in order with a
+    * mutable seniors cache), so one file's exploded assignment rows are
+    * materialized in a single task. That is O(rows of the LARGEST file),
+    * not O(corpus) — parallelism is per-file and unaffected by corpus
+    * size. The guard turns a pathological single file (one multi-GB
+    * document) into a diagnosable failure instead of a silent executor
+    * OOM; legitimate inputs are nowhere near it (the reference corpus'
+    * largest file is ~1.4k rows). */
   def resolvedAssignments(spark: SparkSession, dir: String): Dataset[AsgResolved] = {
     import spark.implicits._
-
-    val grid = gridRows(spark, dir).toDF()
-
-    val wFile = Window.partitionBy($"file").orderBy($"rowIdx")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-
-    // T2: okrug fill + okrug-segment id; gubernia fill scoped to the okrug
-    // segment (okrug headers reset gubernia to "Неизвестно", :567).
-    val boundary = ($"kind" === "okrug") ||
-      ($"kind" === "gubernia" && $"gubText".isNotNull) ||
-      $"gubFromCell".isNotNull
-    val withCtx = grid
-      .withColumn("okrug", coalesce(last(when($"kind" === "okrug", $"okrugText"), ignoreNulls = true).over(wFile), lit("Неизвестно")))
-      .withColumn("okrugSeg", count(when($"kind" === "okrug", 1)).over(wFile))
-      .withColumn("segId", count(when(boundary, 1)).over(wFile))
-      .withColumn("gubVal",
-        when($"kind" === "gubernia", $"gubText").otherwise($"gubFromCell"))
-
-    val wOkrugSeg = Window.partitionBy($"file", $"okrugSeg").orderBy($"rowIdx")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val withGub = withCtx
-      .withColumn("gub", coalesce(last($"gubVal", ignoreNulls = true).over(wOkrugSeg), lit("Неизвестно")))
-
-    val data = withGub.where($"kind" === "data")
-
-    // T5: location ditto fill over data rows in file order (:677-681).
-    val wFileData = Window.partitionBy($"file").orderBy($"rowIdx")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val locIdx = when($"year" === 1901, lit(2)).otherwise(lit(4))
-    val descIdx = when($"year" === 1901, lit(1)).otherwise(lit(0))
-    val persIdx = when($"year" === 1901, lit(3)).otherwise(lit(5))
-    val withCity = data
-      .withColumn("locRaw", element_at($"cells", locIdx + 1))
-      .withColumn("descRaw", element_at($"cells", descIdx + 1))
-      .withColumn("persHtml", element_at($"cells", persIdx + 1))
-      .withColumn("cityStdOwn", stdUdf($"locRaw")) // std strips internally (:39)
-      .withColumn("cityFill",
-        last(when($"cityStdOwn".isNotNull && $"cityStdOwn" =!= "»", $"cityStdOwn"), ignoreNulls = true).over(wFileData))
-      .withColumn("cityStd",
-        when($"cityStdOwn".isNull || $"cityStdOwn" === "»", $"cityFill").otherwise($"cityStdOwn"))
-      .where($"cityStd".isNotNull) // :680 — no city and no previous → drop row
-
-    // T9 stats (:656-659) + T8 role (:683-698).
-    val withRowAttrs = withCity
-      .withColumn("estCount", when($"year" =!= 1901, cleanNumUdf(element_at($"cells", lit(2)))).otherwise(lit(null: Integer)))
-      .withColumn("workCount", when($"year" =!= 1901, cleanNumUdf(element_at($"cells", lit(3)))).otherwise(lit(null: Integer)))
-      .withColumn("boilCount", when($"year" =!= 1901, cleanNumUdf(element_at($"cells", lit(4)))).otherwise(lit(null: Integer)))
-      .withColumn("roleTriple", roleUdf(pyStripUdf($"descRaw")))
-
-    // T6: personnel parse + ditto (:700-706). The ditto memory is the last
-    // real record from any STRICTLY PRIOR row in the current segment.
-    val wSegPrev = Window.partitionBy($"file", $"segId").orderBy($"rowIdx")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val withRecords = withRowAttrs
-      .withColumn("isDitto", dittoStdUdf($"persHtml") === "»")
-      .withColumn("parsedArr", when(!$"isDitto", parseUdf($"persHtml")))
-      .withColumn("lastReal", lastRealUdf($"parsedArr"))
-      .withColumn("dittoRec", last($"lastReal", ignoreNulls = true).over(wSegPrev))
-      .withColumn("records",
-        when($"isDitto", when($"dittoRec".isNotNull, array($"dittoRec")))
-          .otherwise($"parsedArr"))
-      // :708 — unparseable/empty (or ditto with no memory) → row dropped
-      .where($"records".isNotNull && size($"records") > 0)
-
-    // P1 explode → assignment grain.
-    val exploded = withRecords
-      .select(
-        $"file", $"fileIdx", $"year", $"rowIdx", $"segId",
-        $"okrug", $"gub",
-        $"roleTriple._1".as("role"), $"roleTriple._2".as("uchId"), $"roleTriple._3".as("uchDesc"),
-        $"cityStd", persRawUdf($"persHtml").as("persRaw"),
-        $"estCount", $"workCount", $"boilCount",
-        posexplode($"records").as(Seq("ord", "rec")))
-      .select(
-        $"file", $"fileIdx", $"year", $"rowIdx", $"segId", $"ord",
-        $"okrug", $"gub", $"role", $"uchId", $"uchDesc", $"cityStd", $"persRaw",
-        $"rec.name".as("name"), $"rec.rankAbbr".as("rankAbbr"),
-        $"rec.profAbbr".as("profAbbr"), $"rec.eduAbbr".as("eduAbbr"),
-        $"rec.startDateRaw".as("startDateRaw"), $"rec.endDateRaw".as("endDateRaw"),
-        $"rec.isVacancy".as("isVacancy"), $"rec.isActing".as("isActing"),
-        $"rec.notes".as("notes"), $"rec.specialRole".as("specialRole"),
-        $"estCount", $"workCount", $"boilCount")
-      .as[AsgRow]
-
-    // E5: per-file sorted fold (cache + as-of DB fallback + backfill).
-    //
-    // MEMORY BOUND: senior back-references are inherently sequential per
-    // source file (the reference walks one document's rows in order with a
-    // mutable seniors cache), so one file's exploded assignment rows are
-    // materialized in a single task. That is O(rows of the LARGEST file),
-    // not O(corpus) — parallelism is per-file and unaffected by corpus
-    // size. The guard below turns a pathological single file (one
-    // multi-GB document) into a diagnosable failure instead of a silent
-    // executor OOM; legitimate inputs are nowhere near it (the reference
-    // corpus' largest file is ~1.4k rows).
-    exploded.groupByKey(_.file).flatMapGroups { (f, it) =>
+    perFile(spark, dir) { (base, year, content) =>
       SeniorResolver.resolveFile(
-        guardFileRows(f, it.toVector).sortBy(r => (r.rowIdx, r.ord)))
+        guardFileRows(base, FileFold(HtmlGrid.parseFile(base, year, year, content))))
     }
   }
 
@@ -235,6 +134,27 @@ object ReferenceEtl {
         s"'$file' has ${rows.size} rows (cap $MaxFileRows). Split the input " +
         s"document or raise MaxFileRows if the executor heap allows.")
     rows
+  }
+
+  /** The int fields of a first-seen key, depth first: the orderKey's
+    * fields (plus the educations' sub-slot). Sorting by this sequence is
+    * Spark's struct order; the non-int payload of a location's key never
+    * decides it because orderKeys are unique. */
+  private def orderInts(r: Row): Seq[Int] =
+    r.toSeq.flatMap { case i: Int => Seq(i); case s: Row => orderInts(s); case _ => Nil }
+
+  /** E1-E4: one row per distinct `keys`, carrying the group's min of
+    * `first` (the orderKey, or a struct led by it) as `first`, and `idCol`
+    * numbered from 1 in first-seen order. Grouped on the executors,
+    * numbered on the driver: the dims are broadcast into the fact join,
+    * so collecting them adds no bound the join did not already impose. */
+  private def firstSeenDim(keyed: DataFrame, keys: Seq[String], first: Column, idCol: String): DataFrame = {
+    val grouped = keyed.groupBy(keys.map(col): _*).agg(min(first).as("first"))
+    val at = grouped.schema.fieldIndex("first")
+    val numbered = grouped.collect().sortBy(r => orderInts(r.getStruct(at)))(Ordering.Implicits.seqOrdering)
+      .zipWithIndex.map { case (r, i) => Row.fromSeq(r.toSeq :+ (i + 1L)) }
+    keyed.sparkSession.createDataFrame(numbered.toSeq.asJava,
+      grouped.schema.add(idCol, LongType, nullable = false))
   }
 
   /** Full ETL: corpus directory → six star-schema tables (E1-E4, E6). */
@@ -258,32 +178,22 @@ object ReferenceEtl {
       .cache()
 
     // E4/E1: Inspectors — first-seen canonical names over emitted named rows.
-    def firstSeenDim(keyed: DataFrame, keyCols: Seq[String], idCol: String): DataFrame = {
-      val grouped = keyed
-        .groupBy(keyCols.map(col): _*)
-        .agg(min($"orderKey").as("firstSeen"))
-      Ids.sequenceBy(grouped, Seq(col("firstSeen")), idCol).drop("firstSeen")
-    }
-
-    val inspectors = firstSeenDim(
-      resolved.where($"canonName".isNotNull).select($"canonName", $"orderKey"),
-      Seq("canonName"), "InspectorID")
-      .select($"InspectorID", $"canonName".as("FullName"), lit(null).cast(org.apache.spark.sql.types.StringType).as("Notes"))
+    val inspectors = firstSeenDim(resolved.where($"canonName".isNotNull),
+      Seq("canonName"), $"orderKey", "InspectorID")
+      .select($"InspectorID", $"canonName".as("FullName"), lit(null).cast(StringType).as("Notes"))
 
     // E1: Ranks / Professions — dictionary-enriched first-seen dims.
     def dotFlex(dict: Map[String, String]) =
       udf((k: String) => if (k == null) None else D.dotFlexGet(dict, k))
 
-    val ranks = firstSeenDim(
-      resolved.where($"emitted" && $"stdRank".isNotNull).select($"stdRank", $"orderKey"),
-      Seq("stdRank"), "RankID")
+    val ranks = firstSeenDim(resolved.where($"emitted" && $"stdRank".isNotNull),
+      Seq("stdRank"), $"orderKey", "RankID")
       .select($"RankID", $"stdRank".as("Abbreviation"),
         dotFlex(D.knownRanksMap)($"stdRank").as("FullName_RU"),
-        lit(null).cast(org.apache.spark.sql.types.StringType).as("RankType"))
+        lit(null).cast(StringType).as("RankType"))
 
-    val professions = firstSeenDim(
-      resolved.where($"emitted" && $"stdProf".isNotNull && !$"profRefused").select($"stdProf", $"orderKey"),
-      Seq("stdProf"), "ProfessionID")
+    val professions = firstSeenDim(resolved.where($"emitted" && $"stdProf".isNotNull && !$"profRefused"),
+      Seq("stdProf"), $"orderKey", "ProfessionID")
       .select($"ProfessionID", $"stdProf".as("Abbreviation"),
         dotFlex(D.knownProfessionsMap)($"stdProf").as("FullName_RU"))
 
@@ -293,32 +203,22 @@ object ReferenceEtl {
       .select($"stdEdu".as("k"), struct($"orderKey", lit(0).as("sub")).as("orderKey"))
       .unionAll(resolved.where($"emitted" && $"profRefused")
         .select($"stdProf".as("k"), struct($"orderKey", lit(1).as("sub")).as("orderKey")))
-    val educations = firstSeenDim(eduEvents, Seq("k"), "EducationID")
+    val educations = firstSeenDim(eduEvents, Seq("k"), $"orderKey", "EducationID")
       .select($"EducationID", $"k".as("Abbreviation"),
         dotFlex(D.knownEducationsMap)($"k").as("FullName_RU"))
 
-    // E3: Locations — null-safe composite key, first-seen per ROW (:717).
-    val rowGrain = resolved
-      .where($"ord" === 0) // one location probe per surviving row
-      .select($"locKeyCity", $"locKeyGub", $"locKeyOkrug",
-        $"cityStd", $"gub", $"okrug", $"orderKey")
-    val locFirst = rowGrain
-      .groupBy($"locKeyCity", $"locKeyGub", $"locKeyOkrug")
-      .agg(min($"orderKey").as("firstSeen"))
-    val locWithId = Ids.sequenceBy(locFirst, Seq(col("firstSeen")), "LocationID")
-    // Stored values come from the first row that created the location (:240-245).
-    val locations = locWithId.as("l")
-      .join(rowGrain.as("r"),
-        $"l.locKeyCity" <=> $"r.locKeyCity" &&
-        $"l.locKeyGub" <=> $"r.locKeyGub" &&
-        $"l.locKeyOkrug" <=> $"r.locKeyOkrug" &&
-        $"l.firstSeen" === $"r.orderKey")
+    // E3: Locations — null-safe composite key, first-seen per ROW (:717),
+    // one probe per surviving row (ord 0). The stored values come from the
+    // first row that created the location (:240-245): they ride in `first`.
+    val locations = firstSeenDim(resolved.where($"ord" === 0),
+      Seq("locKeyCity", "locKeyGub", "locKeyOkrug"),
+      struct($"orderKey", $"cityStd", $"gub", $"okrug"), "LocationID")
       .select($"LocationID",
-        pyStripOrNullUdf($"r.cityStd").as("CityName"),
-        pyStripOrNullUdf($"r.gub").as("GuberniaName"),
-        pyStripOrNullUdf($"r.okrug").as("OkrugName"),
+        pyStripOrNullUdf($"first.cityStd").as("CityName"),
+        pyStripOrNullUdf($"first.gub").as("GuberniaName"),
+        pyStripOrNullUdf($"first.okrug").as("OkrugName"),
         lit("Город").as("LocationType"),
-        $"l.locKeyCity", $"l.locKeyGub", $"l.locKeyOkrug")
+        $"locKeyCity", $"locKeyGub", $"locKeyOkrug")
 
     // E6: fact assembly — broadcast dim joins + scale-safe AssignmentID.
     val fact0 = resolved.where($"emitted")
@@ -466,5 +366,86 @@ object SeniorResolver {
         r.estCount, r.workCount, r.boilCount, emit)
     }
     out.iterator
+  }
+}
+
+/** T2-P1 for one file (:520-706): context fills, role and counts, personnel
+  * parse + ditto, and the explode, as one pass over the file's grid rows in
+  * row order. Pure; runs inside the parse task. */
+object FileFold {
+  private val Unknown = "Неизвестно"
+
+  /** T6 memory candidate: the row's last record eligible to be remembered
+    * (:754 after the :748 skip — named, non-vacancy, non-special,
+    * canonicalizable). */
+  private def lastReal(recs: Vector[ParsedAssignment]): ParsedAssignment =
+    recs.reverseIterator.find(r => r.name != null && !r.isVacancy && r.specialRole == null &&
+      RuText.canonicalInspectorName(r.name) != null).orNull
+
+  private def nz(s: String): String = if (s == null) "" else s
+
+  def apply(grid: Vector[GridRow]): Vector[AsgRow] = {
+    val out = Vector.newBuilder[AsgRow]
+    var okrug = Unknown
+    var gub: String = null  // gubernia fill; every okrug row resets it (:567)
+    var segId = 0L          // boundary rows so far, the current row included
+    var city: String = null // last own city over ALL data rows (:677-681)
+    var memory: ParsedAssignment = null // last real record of segment memSeg
+    var memSeg = -1L
+
+    for (g <- grid) {
+      // T2: a 1901 data row naming its gubernia in a cell is a boundary too.
+      if (g.kind == "okrug") {
+        if (g.okrugText != null) okrug = g.okrugText
+        gub = null
+      }
+      val gubVal = if (g.kind == "gubernia") g.gubText else g.gubFromCell
+      if (gubVal != null) gub = gubVal
+      if (g.kind == "okrug" || (g.kind == "gubernia" && g.gubText != null) || g.gubFromCell != null)
+        segId += 1
+
+      if (g.kind == "data") {
+        val old = g.year == 1901
+        val cells = g.cells
+        // T5 runs over every data row, before the :680 and :708 drops, so
+        // a row dropped for empty records still passes its city on.
+        val own = RuText.standardizeText(cells(if (old) 2 else 4))
+        if (own != null && own != "»") city = own
+        if (city != null) {
+          val pers = cells(if (old) 3 else 5)
+          // T6 (:700-706): the ditto memory is the last real record of a
+          // STRICTLY PRIOR surviving row in the same segment; ditto rows
+          // never update it. A cell that standardizes to null is neither a
+          // ditto nor parsed: the row is dropped (:708), memory untouched.
+          val dittoStd = RuText.standardizeText(pyStrip(MiniDom.unescapeEntities(nz(pers))))
+          val records =
+            if (dittoStd == null) Vector.empty
+            else if (dittoStd == "»") {
+              if (memory != null && memSeg == segId) Vector(memory) else Vector.empty
+            } else {
+              val recs = Personnel.parse(pers)
+              val m = lastReal(recs)
+              if (m != null) { memory = m; memSeg = segId }
+              recs
+            }
+          if (records.nonEmpty) {
+            // T9 (:656-659): element_at(cells, 2..4) is 1-based, so cells 1..3.
+            def count(i: Int): Integer = if (old) null else RuText.cleanNumber(cells(i))
+            val (estCount, workCount, boilCount) = (count(1), count(2), count(3))
+            val (role, uchId, uchDesc) = RoleClassifier.classify(pyStrip(nz(cells(if (old) 1 else 0))))
+            val persRaw = MiniDom.unescapeEntities(pyStrip(nz(pers))) // :767
+            // P1: explode → assignment grain.
+            for ((r, ord) <- records.iterator.zipWithIndex)
+              out += AsgRow(g.file, g.fileIdx, g.year, g.rowIdx, segId, ord,
+                okrug, if (gub == null) Unknown else gub,
+                role, uchId, uchDesc, city, persRaw,
+                r.name, r.rankAbbr, r.profAbbr, r.eduAbbr, r.startDateRaw, r.endDateRaw,
+                r.isVacancy, r.isActing, r.notes, r.specialRole,
+                estCount, workCount, boilCount)
+          }
+        }
+      }
+    }
+    out.result()
   }
 }

@@ -1,13 +1,16 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.types.DataType
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
-import graft.etl.{GoldenCheck, ReferenceEtl}
+import graft.etl.{EtlTables, GoldenCheck, ReferenceEtl}
 
-/** End-to-end golden corpus test (SURVEY.md §5.2.3): run the full Spark
-  * ETL over the reference corpus and diff all six star-schema tables
-  * row-for-row against tools/golden (the output of executing the
-  * unmodified reference ETL).
+/** End-to-end golden corpus tests (SURVEY.md §5.2.3): run the full Spark
+  * ETL and diff all six star-schema tables row-for-row against goldens —
+  * tools/golden (the output of executing the unmodified reference ETL) for
+  * the reference corpus when it is present, and, always, the committed
+  * tables of the generated fixture corpus in test resources etl_fixture/.
   */
 class GoldenEtlSpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -17,15 +20,28 @@ class GoldenEtlSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   override def afterAll(): Unit = spark.stop()
 
+  private def tables(t: EtlTables): Seq[(String, DataFrame, String)] = Seq(
+    ("inspectors", t.inspectors, "InspectorID"), ("ranks", t.ranks, "RankID"),
+    ("professions", t.professions, "ProfessionID"), ("educations", t.educations, "EducationID"),
+    ("locations", t.locations, "LocationID"), ("assignments", t.assignments, "AssignmentID"))
+
   test("full corpus ETL matches the reference's six tables exactly") {
     assume(new java.io.File(corpus).isDirectory, "reference corpus not present")
-    val t = ReferenceEtl.run(spark, corpus)
-    assert(GoldenCheck.diff("inspectors", t.inspectors, s"$repo/tools/golden/inspectors.json", "InspectorID") == 0)
-    assert(GoldenCheck.diff("ranks", t.ranks, s"$repo/tools/golden/ranks.json", "RankID") == 0)
-    assert(GoldenCheck.diff("professions", t.professions, s"$repo/tools/golden/professions.json", "ProfessionID") == 0)
-    assert(GoldenCheck.diff("educations", t.educations, s"$repo/tools/golden/educations.json", "EducationID") == 0)
-    assert(GoldenCheck.diff("locations", t.locations, s"$repo/tools/golden/locations.json", "LocationID") == 0)
-    assert(GoldenCheck.diff("assignments", t.assignments, s"$repo/tools/golden/assignments.json", "AssignmentID") == 0)
+    for ((name, df, id) <- tables(ReferenceEtl.run(spark, corpus)))
+      assert(GoldenCheck.diff(name, df, s"$repo/tools/golden/$name.json", id) == 0, name)
+  }
+
+  test("fixture corpus ETL matches its committed six tables and schemas exactly") {
+    // 4 rosters from perfbench/gen.py roster_corpus (seed 2, ~60 rows each):
+    // the 1901 4-column layout and the plain, class-tagged and noisy-span
+    // 6-column layouts, with rowspans, ditto marks and senior back-references.
+    def res(rel: String) = new java.io.File(getClass.getResource(s"/etl_fixture/$rel").toURI).getPath
+    val schemas = new com.fasterxml.jackson.databind.ObjectMapper()
+      .readTree(new java.io.File(res("golden/schema.json")))
+    for ((name, df, id) <- tables(ReferenceEtl.run(spark, res("corpus")))) {
+      assert(GoldenCheck.diff(name, df, res(s"golden/$name.json"), id) == 0, name)
+      assert(df.schema == DataType.fromJson(schemas.get(name).toString), name)
+    }
   }
 
   test("E5 per-file guard: pathological single-file size fails fast, sane sizes pass") {

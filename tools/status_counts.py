@@ -5,16 +5,47 @@ reports — derive them from artifacts instead).
 
 Reads:
   - target/test-reports/*.xml   (scalatest JUnit XML: suites, tests)
+  - an sbt test log, if given   (canceled tests: the XML counts them as
+                                 passed, only the console log marks them)
   - CORRECTNESS_r{N}.json       (newest: registered/hash-green/no_oracle)
   - bench_full_sf0.1_r{N}.json  (newest: headline + extended totals)
 
-Usage: python3 tools/status_counts.py   (from the repo root)
+Usage: python3 tools/status_counts.py [SBT_TEST_LOG]   (from the repo root)
 """
 import glob
 import json
 import os
 import re
+import sys
 import xml.etree.ElementTree as ET
+
+_PREFIX = re.compile(r"^(?:\[\w+\] )?")
+_SUITE = re.compile(r"^(\S+):$")
+_CANCELED = re.compile(r"^\s*- (.*) !!! CANCELED !!!$")
+_SUMMARY = re.compile(r"Tests: succeeded (\d+), failed (\d+), canceled (\d+), "
+                      r"ignored (\d+), pending (\d+)")
+
+
+def sbt_cancels(lines):
+    """Scan an sbt test log. Returns (totals, cancels): the summed
+    `Tests: succeeded N, failed N, canceled N, ...` summary lines as a dict
+    (None if the log has none), and one (suite, test, reason) per
+    `!!! CANCELED !!!` test; the reason is the indented line after it."""
+    totals, cancels, suite = None, [], None
+    lines = [_PREFIX.sub("", ln.rstrip("\n")) for ln in lines]
+    for i, ln in enumerate(lines):
+        if m := _SUMMARY.search(ln):
+            keys = ("succeeded", "failed", "canceled", "ignored", "pending")
+            totals = totals or dict.fromkeys(keys, 0)
+            for k, v in zip(keys, m.groups()):
+                totals[k] += int(v)
+        elif m := _SUITE.match(ln):
+            suite = m.group(1)
+        elif m := _CANCELED.match(ln):
+            nxt = lines[i + 1] if i + 1 < len(lines) else ""
+            reason = nxt.strip() if nxt.startswith("  ") and not _CANCELED.match(nxt) else ""
+            cancels.append((suite, m.group(1), reason))
+    return totals, cancels
 
 
 def newest(pattern):
@@ -25,7 +56,7 @@ def newest(pattern):
     return max(paths, key=roundno) if paths else None
 
 
-def main():
+def main(argv):
     xmls = glob.glob("target/test-reports/*.xml")
     suites = tests = failures = errors = 0
     for p in xmls:
@@ -38,6 +69,15 @@ def main():
             errors += int(s.get("errors", 0))
     print(f"tests: {tests} across {suites} suites "
           f"({failures} failures, {errors} errors)")
+
+    if len(argv) > 1:
+        with open(argv[1], encoding="utf-8", errors="replace") as f:
+            totals, cancels = sbt_cancels(f)
+        if totals:
+            print("sbt log: " + ", ".join(f"{k} {v}" for k, v in totals.items()))
+        print(f"canceled: {len(cancels)} (counted as passed in the XML)")
+        for suite, test, reason in cancels:
+            print(f"  {suite} :: {test} — {reason}")
 
     cpath = newest("CORRECTNESS_r*.json")
     if cpath:
@@ -78,4 +118,4 @@ def main():
 
 
 if __name__ == "__main__":
-    main()
+    main(sys.argv)
